@@ -389,11 +389,27 @@ def common_word_set(names: list[str], cut_off: float = 0.01) -> set[str]:
     return {w for w, c in counts.items() if c > mx * cut_off}
 
 
+@lru_cache(maxsize=8)
+def _strip_patterns(words: frozenset) -> tuple:
+    return tuple((w, re.compile(rf"\b{re.escape(w)}\b"))
+                 for w in sorted(words))
+
+
 def strip_words(name: str, word_set) -> str:
     """Remove whole-word occurrences of word_set from name, collapse spaces
     (name_matcher.py:937-962).  Iterates in sorted order so the result is
     deterministic across processes (the reference iterates a raw set,
-    whose order is arbitrary)."""
-    for word in sorted(word_set):
-        name = " ".join(re.sub(rf"\b{re.escape(word)}\b", "", name).split())
+    whose order is arbitrary).
+
+    Equal to removing every word in turn and collapsing spaces after each
+    removal, but cheap for large sets: spaces are collapsed once up front
+    (each removal keeps them collapsed), and a word is only applied when
+    it is a substring of the current name -- ``\\bword\\b`` cannot match
+    otherwise."""
+    if not word_set:
+        return name
+    name = " ".join(name.split())
+    for word, pattern in _strip_patterns(frozenset(word_set)):
+        if word in name:
+            name = " ".join(pattern.sub("", name).split())
     return name

@@ -133,13 +133,11 @@ class TfidfOracle:
                 cand[qid].update(mids)
         results = []
         for qid, mids in enumerate(cand):
-            scored = []
-            for mid in mids:
-                # 9-dp rounding before ranking, like the Spark pipeline:
-                # tie order must not depend on float summation order
-                cos = round(float(q[qid] @ m[mid]), 9)
-                if cos > 0:
-                    scored.append((cos, mid))
+            # 9-dp rounding before ranking, like the Spark pipeline: tie
+            # order must not depend on float summation order.  No cos > 0
+            # filter, as in Spark: a candidate shares a capped prefix gram
+            # with its query, so the raw dot is positive by construction
+            scored = [(round(float(q[qid] @ m[mid]), 9), mid) for mid in mids]
             scored.sort(key=lambda t: (-t[0], t[1]))
             results.append([(mid, cos) for cos, mid in scored[:top_n]])
         return results

@@ -29,6 +29,25 @@ from pyspark.sql import functions as F
 from .tfidf import GROUP_COL
 
 
+def by_query(df: DataFrame) -> DataFrame:
+    """Hash-partition candidate rows by (group, qid) into exactly
+    ``spark.sql.shuffle.partitions`` partitions.
+
+    The pair stages downstream -- verify dot, per-qid top-n window, the
+    name joins and the scoring UDF -- cost CPU per pair, not per shuffled
+    byte, yet the candidate shuffle is small, so AQE sized by bytes
+    coalesces it (and with it the whole pair chain) to one task.  A
+    repartition by number (origin REPARTITION_BY_NUM) is never coalesced,
+    and every later operator keyed on (group, qid) reuses it.  It takes
+    the place of the (group, qid) exchange the chain needs anyway, except
+    in an exact join whose master side is broadcast and whose query side
+    already arrives clustered by query: there it is one added exchange of
+    the summed pairs.  A query's rows are bounded by its candidate set,
+    so the qid hash does not skew."""
+    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return df.repartition(n, GROUP_COL, "qid")
+
+
 def cap_hot_ngrams(weights: DataFrame, idf: DataFrame,
                    df_cap_frac: float | None,
                    min_docs: int = 100) -> DataFrame:
@@ -78,11 +97,12 @@ def cosine_top_n(
     m = master_w.select(
         GROUP_COL, F.col("id").alias("mid"), "ngram",
         F.col("weight").alias("wm"))
-    pairs = (
+    # by_query AFTER the (group, qid, mid) sum, so its map-side partial
+    # aggregation is kept; the window then reuses the query partitioning
+    pairs = by_query(
         q.join(m, [GROUP_COL, "ngram"])
         .groupBy(GROUP_COL, "qid", "mid")
-        .agg(F.sum(F.col("wq") * F.col("wm")).alias("cosine"))
-    )
+        .agg(F.sum(F.col("wq") * F.col("wm")).alias("cosine")))
     if round_decimals is not None:
         pairs = pairs.withColumn(
             "cosine", F.round(F.col("cosine"), round_decimals))
@@ -293,7 +313,11 @@ def prefix_filtered_top_n(
     # duplicated (qid, mid) long rows never exist as shuffle rows.
     q_caps = q_post.select(GROUP_COL, "ngram",
                            F.explode("__qids").alias("qid"))
-    cand = (q_caps.join(m_post, [GROUP_COL, "ngram"])
+    # by_query BEFORE the per-qid aggregate: the join output is keyed by
+    # (group, ngram), so the repartition is a real exchange that replaces
+    # the aggregate's own.  On the aggregate's output it would equal the
+    # child partitioning, be dropped, and AQE would coalesce again
+    cand = (by_query(q_caps.join(m_post, [GROUP_COL, "ngram"]))
             .groupBy(GROUP_COL, "qid")
             .agg(F.array_distinct(F.flatten(F.collect_list("__mids")))
                  .alias("__cands"))

@@ -125,6 +125,10 @@ def postprocess_rescore(
             return pd.Series(100.0 * score_batch(a2, b2, metric_names)
                              .mean(axis=1))
 
+        # nondeterministic only to pin it in place: a deterministic UDF
+        # lets a later ``score > threshold`` filter be pushed below this
+        # projection, which evaluates the UDF a second time for the filter
+        _rescore = _rescore.asNondeterministic()
         return matches.withColumn(
             "score", _rescore(F.col(query_name_col), F.col(cand_name_col)))
 

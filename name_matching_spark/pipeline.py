@@ -16,6 +16,12 @@ Plan-shape notes (these matter at scale):
   one computation instead of re-deriving the lineage.
 * Every stage can checkpoint to a StageCheckpoint so a killed run resumes
   from the last complete stage.
+* Pair stages are sized by partition count, not bytes: the candidate rows
+  are hash-partitioned by (group, qid) into spark.sql.shuffle.partitions
+  partitions (operators.blocking.by_query), which AQE does not coalesce,
+  and verify, top-n, the name joins and the scoring UDF reuse that
+  partitioning.  Their cost is CPU per pair, and the candidate shuffle
+  is too small for a byte-sized read to spread it over the task slots.
 """
 
 from __future__ import annotations

@@ -11,6 +11,25 @@ import os
 
 from pyspark.sql import SparkSession
 
+# share of host RAM given to the driver heap when SPARK_DRIVER_MEMORY is
+# unset.  Local mode runs every task inside that heap, and the JVM's
+# off-heap use plus the Python workers come on top of it
+DRIVER_MEMORY_FRACTION = 0.4
+
+
+def host_memory_mb(meminfo: str = "/proc/meminfo") -> int:
+    """Host RAM in MB, from MemTotal."""
+    with open(meminfo) as f:
+        for line in f:
+            if line.startswith("MemTotal:"):
+                return int(line.split()[1]) // 1024
+    raise RuntimeError(f"no MemTotal line in {meminfo}")
+
+
+def default_driver_memory() -> str:
+    """Driver heap used when SPARK_DRIVER_MEMORY is unset."""
+    return f"{int(host_memory_mb() * DRIVER_MEMORY_FRACTION)}m"
+
 
 def get_spark(
     app_name: str = "name-matching-spark",
@@ -18,7 +37,8 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS")
+               or len(os.sched_getaffinity(0)))
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
     shuffle_partitions = shuffle_partitions or int(
         os.environ.get("SPARK_SHUFFLE_PARTITIONS", str(max(cpus, 32))))
@@ -57,13 +77,17 @@ def get_spark(
         # reads ~3.5 MB but produces 41M rows -- 3 tasks on 32 cores,
         # measured 13.4s -> 4.0s at 128k).  The floor only binds when the
         # total shuffle is small (extra tasks are cheap there); large
-        # shuffles still coalesce to total/parallelism at any scale
+        # shuffles still coalesce to total/parallelism at any scale.  The
+        # CPU-bound pair stages (verify dot, top-n, scoring UDF) no longer
+        # depend on it: blocking.by_query sizes them by partition count,
+        # which AQE does not coalesce
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
                 os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION", "128k"))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.driver.memory",
-                os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+                os.environ.get("SPARK_DRIVER_MEMORY")
+                or default_driver_memory())
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.local.dir",

@@ -12,7 +12,10 @@
   substitution beats it (sim goes negative in the reference too), and the
   chi-squared family, whose self-sim < 1 by the reference's own goldens.
 * Batch kernels equal scalar kernels on arbitrary unicode.
+* strip_words' fast path equals removing every word in turn.
 """
+
+import re
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -21,9 +24,11 @@ from name_matching_spark.nm_core import metrics as M
 from name_matching_spark.nm_core import metrics_batch as MB
 from name_matching_spark.nm_core.preprocess import (
     PreprocessConfig,
+    legal_word_set,
     light_preprocess_name,
     pipeline_preprocess_name,
     preprocess_name,
+    strip_words,
 )
 
 TEXT = st.text(
@@ -137,3 +142,27 @@ def test_batch_kernels_equal_scalar_on_unicode(pairs):
         fn = M.METRIC_FUNCTIONS[name]
         for i, (x, y) in enumerate(pairs):
             assert abs(got[i] - fn(x, y)) < 1e-12, (name, x, y)
+
+
+def _strip_words_every_word(name, word_set):
+    """strip_words before its fast path: every word, in sorted order."""
+    for word in sorted(word_set):
+        name = " ".join(re.sub(rf"\b{re.escape(word)}\b", "", name).split())
+    return name
+
+
+LEGAL = sorted(legal_word_set())
+# names built from legal words, near-misses and separators, so whole-word,
+# substring-only and adjacent-removal cases all come up
+NAME_PARTS = st.sampled_from(LEGAL) | st.sampled_from(
+    ["acme", "bv", "nv", "co", "a", "b.v.", "&", "-", " ", "  ", "\t", "."])
+
+
+@settings(max_examples=500, deadline=None)
+@given(st.lists(NAME_PARTS, max_size=12).map("".join)
+       | st.lists(NAME_PARTS, max_size=12).map(" ".join) | TEXT,
+       st.frozensets(st.sampled_from(LEGAL) | WORDS, max_size=6)
+       | st.just(frozenset(LEGAL)))
+def test_strip_words_equals_every_word_removal(name, words):
+    assert strip_words(name, words) == _strip_words_every_word(name, words)
+    assert strip_words(name, set(words)) == strip_words(name, words)
