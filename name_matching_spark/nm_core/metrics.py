@@ -749,20 +749,6 @@ for _gi, _g in enumerate(_EDITEX_GROUPS):
         _EDITEX_MASK[_ch] = _EDITEX_MASK.get(_ch, 0) | (1 << _gi)
 
 
-def _editex_r(c1: str, c2: str, group_cost: int, mismatch: int) -> int:
-    if c1 == c2:
-        return 0
-    if _EDITEX_MASK.get(c1, 0) & _EDITEX_MASK.get(c2, 0):
-        return group_cost
-    return mismatch
-
-
-def _editex_d(c1: str, c2: str, group_cost: int, mismatch: int) -> int:
-    if c1 != c2 and (c1 == "H" or c1 == "W"):
-        return group_cost
-    return _editex_r(c1, c2, group_cost, mismatch)
-
-
 @lru_cache(maxsize=65536)
 def _editex_prep(raw: str) -> tuple[str, tuple[int, ...], tuple[int, ...]]:
     """NFKD-uppercased string, per-char group masks, and the per-position
@@ -1164,8 +1150,3 @@ def flat_metric_fns(metrics=DEFAULT_METRICS) -> list:
     """Flattened metric callables in score-matrix column order."""
     registry = make_metric_registry(metrics)
     return [fn for fns in registry.values() for fn in fns]
-
-
-def score_pair(src: str, tar: str, fns) -> list[float]:
-    """Score one (src, tar) pair under every metric in ``fns``."""
-    return [fn(str(src), str(tar)) for fn in fns]

@@ -40,25 +40,8 @@ from .metrics import (
 _MAX_VECTOR_LEN = 199
 
 # pairs per internal chunk: bounds the padded tensors (a 2048 x 51 x 51
-# int16 run tensor is ~10 MB, L2/L3-friendly) and keeps buffer reuse hot
+# int16 run tensor is ~10 MB, L2/L3-friendly)
 _CHUNK = 2048
-
-# reusable scratch buffers (keyed by name): repeated mmap/munmap of the
-# per-round tensors was the dominant cost (page-fault churn, measured 10x
-# wall), so scratch space is allocated once per worker and sliced
-_BUFS: dict[str, np.ndarray] = {}
-
-
-def _scratch(key: str, shape: tuple[int, ...], dtype) -> np.ndarray:
-    need = 1
-    for s in shape:
-        need *= int(s)
-    buf = _BUFS.get(key)
-    if buf is None or buf.size < need or buf.dtype != np.dtype(dtype):
-        buf = np.empty(max(need, 1), dtype)
-        _BUFS[key] = buf
-    return buf[:need].reshape(shape)
-
 
 # ---------------------------------------------------------------------------
 # editex

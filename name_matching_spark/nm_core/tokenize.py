@@ -53,10 +53,6 @@ def regexp_tokens(s: str) -> tuple[str, ...]:
     return tuple(_WORD_RE.findall(s))
 
 
-def whitespace_tokens(s: str) -> tuple[str, ...]:
-    return tuple(s.split())
-
-
 # ---------------------------------------------------------------------------
 # Multiset algebra over two Counters (crisp intersection semantics only --
 # the reference's default; soft/fuzzy variants are never used by defaults).

@@ -114,41 +114,6 @@ def cosine_top_n(
     )
 
 
-def rare_prefix_postings(w: DataFrame, idf: DataFrame, prefix_size: int,
-                         posting_cap: int | None = 2000) -> DataFrame:
-    """-> (group, id, ngram): each document's ``prefix_size`` rarest
-    n-grams (by global df, ties on ngram), posting lists truncated to
-    ``posting_cap`` ids.  Module-level so a long-lived caller (streaming;
-    repeated query sets against one master) can build the master postings
-    ONCE and reuse them across runs instead of re-deriving per call."""
-    dfreq = idf.select(GROUP_COL, "ngram", "df")
-    ranked = w.join(F.broadcast(dfreq), [GROUP_COL, "ngram"])
-    win = Window.partitionBy(GROUP_COL, "id").orderBy(
-        F.col("df").asc(), F.col("ngram").asc())
-    out = (ranked.withColumn("__r", F.row_number().over(win))
-           .filter(F.col("__r") <= prefix_size)
-           .select(GROUP_COL, "id", "ngram"))
-    if posting_cap is not None:
-        pwin = Window.partitionBy(GROUP_COL, "ngram").orderBy(
-            F.col("id").asc())
-        out = (out.withColumn("__p", F.row_number().over(pwin))
-               .filter(F.col("__p") <= posting_cap)
-               .drop("__p"))
-    return out
-
-
-def weights_as_map(w: DataFrame, id_alias: str, map_alias: str) -> DataFrame:
-    """-> (group, <id_alias>, <map_alias>): a side's long-form weight
-    vectors as one map column each, for the JVM map_zip_with dot product
-    in the verify join.  Module-level for the same reuse reason as
-    ``rare_prefix_postings``."""
-    return (w.groupBy(GROUP_COL, "id")
-            .agg(F.map_from_entries(
-                F.collect_list(F.struct("ngram", "weight")))
-                .alias(map_alias))
-            .withColumnRenamed("id", id_alias))
-
-
 def _vocab_gids(idf: DataFrame) -> DataFrame:
     """-> (group, ngram, df, n_docs, __gid): dense integer gram ids,
     assigned in NGRAM-ASCENDING order per group so that every ordering the
@@ -163,35 +128,28 @@ def _vocab_gids(idf: DataFrame) -> DataFrame:
 
 def _doc_table(w: DataFrame, idf: DataFrame, prefix_size: int,
                df_cap_frac: float | None, id_alias: str,
-               map_alias: str, int_keys: bool = False) -> DataFrame:
+               map_alias: str) -> DataFrame:
     """One-pass per-document table for the prefix blocker:
-    -> (group, <id_alias>, __pref array<key>, <map_alias> map<key,weight>).
+    -> (group, <id_alias>, __pref array<int>, <map_alias> map<int,weight>).
 
-    Fuses what used to be four separate full passes over a side's weight
-    table -- cap_hot_ngrams (semi-join), rare_prefix_postings (sort +
-    row_number window), and weights_as_map (map aggregation) -- into ONE
-    hash aggregation keyed by (group, id): the df-cap filter and the df
-    lookup ride the same broadcast join, and the prefix selection becomes
-    an array_sort + slice over each document's ~tens of entries instead
-    of a window pass over the full table.  Selection order (df asc,
-    ngram asc) and the df-cap semantics are identical to the operators it
-    replaces; map entries are emitted in that same deterministic order,
-    which also makes the verify dot's summation order run-stable.
-
-    ``int_keys`` replaces gram strings by ``_vocab_gids`` dense ints
-    end-to-end (prefix arrays, posting join keys, map keys): the verify
-    dot then zips int-keyed maps -- measured ~15% off the whole blocking
-    stage at 20k docs -- with identical output (order-preserving ids, see
-    _vocab_gids).  Both sides of one blocking call must use the same
-    mode."""
-    keep = _vocab_gids(idf) if int_keys else idf
+    ONE hash aggregation keyed by (group, id): the df-cap filter, the df
+    lookup and the gram -> ``_vocab_gids`` id mapping ride the same
+    broadcast join, and the prefix selection is an array_sort + slice over
+    each document's ~tens of entries.  Prefix grams are the
+    ``prefix_size`` rarest by (df asc, ngram asc); map entries are emitted
+    in that same deterministic order, which makes the verify dot's
+    summation order run-stable.  Gram ids are dense ints end-to-end
+    (prefix arrays, posting join keys, map keys): the verify dot then zips
+    int-keyed maps -- measured ~15% off the whole blocking stage at 20k
+    docs -- with output identical to string keys (order-preserving ids,
+    see _vocab_gids).  Both sides of one blocking call must be built from
+    the same idf table, so their ids agree."""
+    keep = _vocab_gids(idf)
     if df_cap_frac is not None:
         keep = keep.filter(
             F.col("df") <= F.greatest(F.lit(100.0),
                                       F.col("n_docs") * F.lit(df_cap_frac)))
-    key = "__gid" if int_keys else "ngram"
-    keep = keep.select(GROUP_COL, "ngram", "df",
-                       F.col(key).alias("__k"))
+    keep = keep.select(GROUP_COL, "ngram", "df", F.col("__gid").alias("__k"))
     ents = (
         w.join(F.broadcast(keep), [GROUP_COL, "ngram"])
         .groupBy(GROUP_COL, F.col("id").alias(id_alias))
@@ -206,17 +164,34 @@ def _doc_table(w: DataFrame, idf: DataFrame, prefix_size: int,
                "e -> struct(e.__k, e.weight)))").alias(map_alias))
 
 
-def _grouped_postings(pref_long: DataFrame, id_alias: str,
+def _grouped_postings(doc: DataFrame, id_alias: str,
                       posting_cap: int | None) -> DataFrame:
-    """(group, id, ngram) long postings -> (group, ngram, array<id>),
-    posting lists sorted by id and truncated to ``posting_cap`` --
-    value-identical to the row_number truncation in
-    ``rare_prefix_postings`` but without the extra window pass."""
+    """A ``_doc_table`` -> (group, ngram, __<id_alias>s array<id>): one
+    posting list per prefix gram id, sorted by id and truncated to
+    ``posting_cap`` ids."""
     ids = F.array_sort(F.collect_list(id_alias))
     if posting_cap is not None:
         ids = F.slice(ids, 1, int(posting_cap))
-    return (pref_long.groupBy(GROUP_COL, "ngram")
+    return (doc.select(GROUP_COL, id_alias,
+                       F.explode("__pref").alias("ngram"))
+            .groupBy(GROUP_COL, "ngram")
             .agg(ids.alias(f"__{id_alias}s")))
+
+
+def master_doc_table(master_w: DataFrame, idf: DataFrame, prefix_size: int,
+                     df_cap_frac: float | None) -> DataFrame:
+    """-> (group, mid, __pref, mm): the master side's prefix-blocker doc
+    table.  Module-level so a long-lived caller (``fit_master``: streaming,
+    repeated query sets against one master) builds it ONCE and passes it
+    as ``prefix_filtered_top_n(master_map=)``."""
+    return _doc_table(master_w, idf, prefix_size, df_cap_frac, "mid", "mm")
+
+
+def master_postings(m_doc: DataFrame,
+                    posting_cap: int | None = 2000) -> DataFrame:
+    """-> (group, ngram, __mids): the candidate-join postings of a
+    ``master_doc_table``, passed as ``prefix_filtered_top_n(master_pref=)``."""
+    return _grouped_postings(m_doc, "mid", posting_cap)
 
 
 def prefix_filtered_top_n(
@@ -258,54 +233,36 @@ def prefix_filtered_top_n(
     names made entirely of corpus-common tokens lose candidates first --
     the same names every blocker struggles with.
 
-    ``master_pref``/``master_map`` accept the prebuilt (already df-capped)
-    master-side tables from ``rare_prefix_postings``/``weights_as_map``;
-    when given, the master side of this call is pure reuse -- no master
-    aggregation or window re-runs (the streaming per-micro-batch path).
+    ``master_pref``/``master_map`` accept the prebuilt master-side tables
+    from ``master_postings``/``master_doc_table``, built with this call's
+    ``idf``, ``prefix_size``, ``df_cap_frac`` and ``posting_cap``
+    (``fit_master`` persists them); when given, the master side of this
+    call is pure reuse -- no master aggregation re-runs (the streaming
+    per-micro-batch path).  Without them both are built here from
+    ``master_w``, the same way.
 
     Plan shape (round 6): each side is collapsed into ONE per-document
     aggregation (``_doc_table``) that yields both the prefix grams and
-    the weight map, so the side's weight table is consumed once instead
-    of feeding four separate window/aggregation passes; the candidate
-    join runs over vocabulary-keyed posting ARRAYS (``_grouped_postings``
-    -- the same rows the former per-gram row_number cap produced) and the
-    maps for the verify dot come from the same per-doc tables.  Output is
-    value-identical to the pre-fusion plan (selection order, cap
-    semantics and cosine values unchanged; locked by
-    tests/test_spark_blocking.py and the prefix_cosine_topk oracle).
+    the weight map, so the side's weight table is consumed once; the
+    candidate join runs over vocabulary-keyed posting ARRAYS
+    (``_grouped_postings``) and the maps for the verify dot come from the
+    same per-doc tables.  Selection order, cap semantics and cosine
+    values are locked by tests/test_spark_blocking.py and the
+    prefix_cosine_topk oracle.
     """
-    # int gram keys only when BOTH sides are built here: the fitted-master
-    # tables (master_pref/master_map) are string-keyed, and candidate-join
-    # and dot keys must agree across sides
-    int_keys = master_pref is None
     # lazy localCheckpoints: each doc table has TWO consumers (its posting
     # explode and the verify map join); exchange reuse does not span those
     # subtrees reliably under AQE, so without the checkpoint the whole
     # weights lineage runs twice per side.  Lazy = no job until the plan
     # executes; blocks are GC-released with the plan.
     q_doc = _doc_table(query_w, idf, prefix_size, df_cap_frac,
-                       "qid", "qm",
-                       int_keys=int_keys).localCheckpoint(eager=False)
-    if master_pref is not None:
-        m_post = _grouped_postings(
-            master_pref.select(GROUP_COL, F.col("id").alias("mid"),
-                               "ngram"), "mid", posting_cap)
-        m_map = (master_map if master_map is not None
-                 else weights_as_map(
-                     cap_hot_ngrams(master_w, idf, df_cap_frac),
-                     "mid", "mm")).select(GROUP_COL, "mid", "mm")
-    else:
-        m_doc = _doc_table(master_w, idf, prefix_size, df_cap_frac,
-                           "mid", "mm",
-                           int_keys=True).localCheckpoint(eager=False)
-        m_post = _grouped_postings(
-            m_doc.select(GROUP_COL, "mid",
-                         F.explode("__pref").alias("ngram")),
-            "mid", posting_cap)
-        m_map = m_doc.select(GROUP_COL, "mid", "mm")
-    q_post = _grouped_postings(
-        q_doc.select(GROUP_COL, "qid", F.explode("__pref").alias("ngram")),
-        "qid", posting_cap)
+                       "qid", "qm").localCheckpoint(eager=False)
+    if master_pref is None:
+        master_map = master_doc_table(master_w, idf, prefix_size,
+                                      df_cap_frac).localCheckpoint(eager=False)
+        master_pref = master_postings(master_map, posting_cap)
+    m_map = master_map.select(GROUP_COL, "mid", "mm")
+    q_post = _grouped_postings(q_doc, "qid", posting_cap)
     # candidate set per qid = distinct union of the m-posting arrays of its
     # (cap-surviving) prefix grams.  Deduplicate INSIDE a per-qid array
     # (flatten + array_distinct) instead of a pair-level distinct: the same
@@ -317,7 +274,7 @@ def prefix_filtered_top_n(
     # (group, ngram), so the repartition is a real exchange that replaces
     # the aggregate's own.  On the aggregate's output it would equal the
     # child partitioning, be dropped, and AQE would coalesce again
-    cand = (by_query(q_caps.join(m_post, [GROUP_COL, "ngram"]))
+    cand = (by_query(q_caps.join(master_pref, [GROUP_COL, "ngram"]))
             .groupBy(GROUP_COL, "qid")
             .agg(F.array_distinct(F.flatten(F.collect_list("__mids")))
                  .alias("__cands"))

@@ -35,13 +35,6 @@ def fake_decode(payload: bytes) -> dict:
     }
 
 
-def real_decode(payload: bytes) -> dict:
-    """Real decoder hook -- requires an image library absent here."""
-    raise NotImplementedError(
-        "image/audio codecs are not available in this environment; "
-        "pass decoder=fake_decode or a library-backed callable")
-
-
 def decode_media(df: DataFrame, id_col: str, binary_col: str,
                  decoder=fake_decode) -> DataFrame:
     """-> (id, byte_len, media_type, width, height, ok) via mapInPandas."""
@@ -72,13 +65,6 @@ def fake_resize(payload: bytes, width: int, height: int) -> bytes:
     k = max(1, (width * height) // 64)
     reps = (k // len(payload)) + 1
     return (payload * reps)[:k]
-
-
-def real_resize(payload: bytes, width: int, height: int) -> bytes:
-    """Real resize hook -- requires an image library absent here."""
-    raise NotImplementedError(
-        "image codecs are not available in this environment; "
-        "pass resizer=fake_resize or a library-backed callable")
 
 
 def resize_media(df: DataFrame, id_col: str, binary_col: str,
@@ -112,14 +98,6 @@ def fake_frame(payload: bytes, frame_idx: int) -> str:
     md5(payload || ':' || idx) -- reproducible in SQL, so the whole
     frame-sampling plan is value-oracle-able."""
     return hashlib.md5(payload + f":{frame_idx}".encode()).hexdigest()
-
-
-def real_frame(payload: bytes, frame_idx: int) -> str:
-    """Real frame-extraction hook -- requires a video library absent
-    here."""
-    raise NotImplementedError(
-        "video codecs are not available in this environment; "
-        "pass sampler=fake_frame or a library-backed callable")
 
 
 def sample_frames(df: DataFrame, id_col: str, binary_col: str,

@@ -285,7 +285,7 @@ class FittedMaster:
     Reusing these is what keeps a 100 TB master table out of the
     per-micro-batch plan: without it every batch re-runs the master-side
     normalization UDF, n-gram explode+agg, idf aggregation, weight window
-    and (on the prefix path) the postings/map aggregations -- a full
+    and (on the prefix path) the doc-table/postings aggregations -- a full
     master scan+shuffle per batch for tables that never change.
     """
 
@@ -294,8 +294,8 @@ class FittedMaster:
     idf: DataFrame                # (group, ngram, idf, df, n_docs)
     m_w: DataFrame                # master weights, df-capped when cfg caps
     prefix_size: int | None       # resolved plan choice (fixed at fit time)
-    m_pref: DataFrame | None      # prefix postings (prefix path only)
-    m_map: DataFrame | None       # weight-vector maps (prefix path only)
+    m_pref: DataFrame | None      # master_postings (prefix path only)
+    m_map: DataFrame | None       # master_doc_table (prefix path only)
     fit_fp: str                   # _fit_fingerprint of the fitting config
     grouped: bool = False         # fitted with a blocking-group column?
     group_col: str | None = None  # the fitting group column's NAME
@@ -361,6 +361,7 @@ def fit_master(
              lambda: idf_table(m_tf, doc_counts, checkpoint=False))
 
     def _mw():
+        # capped once: fitted exact branches use cosine_top_n(master_capped=)
         m_w = master_weights(m_tf, idf)
         if config.df_cap_frac is not None:
             from .operators.blocking import cap_hot_ngrams
@@ -371,22 +372,20 @@ def fit_master(
     prefix_size, big_groups = _resolve_plan(config, doc_counts)
     m_pref = m_map = None
     if prefix_size is not None:
-        from .operators.blocking import rare_prefix_postings, weights_as_map
+        from .operators.blocking import master_doc_table, master_postings
+        m_w_pref = m_w
         if big_groups is not None:
             # routed plan: prefix artifacts cover the big groups only --
-            # small groups serve from the exact join, so their postings
-            # and maps would be dead weight in the persisted fit
+            # small groups serve from the exact join, so their doc table
+            # and postings would be dead weight in the persisted fit
             _bg = big_groups
             big_groups = _p("master_big_groups", lambda: _bg)
             m_w_pref = m_w.join(F.broadcast(big_groups), GROUP_COL,
                                 "leftsemi")
-        else:
-            m_w_pref = m_w
-        m_pref = _p("master_prefix_postings",
-                    lambda: rare_prefix_postings(m_w_pref, idf,
-                                                 prefix_size))
-        m_map = _p("master_weight_maps",
-                   lambda: weights_as_map(m_w_pref, "mid", "mm"))
+        m_map = _p("master_doc_table",
+                   lambda: master_doc_table(m_w_pref, idf, prefix_size,
+                                            config.df_cap_frac))
+        m_pref = _p("master_postings", lambda: master_postings(m_map))
     return FittedMaster(masters=b, doc_counts=doc_counts, idf=idf, m_w=m_w,
                         prefix_size=prefix_size, m_pref=m_pref, m_map=m_map,
                         fit_fp=_fit_fingerprint(config),

@@ -22,10 +22,11 @@ expected table as the batch run).
 
 That master-side-only property is also what makes this correct at 100 TB:
 the master side's fitted artifacts (normalized names, idf, capped weights,
-prefix postings/maps) are built ONCE up front by ``pipeline.fit_master``
-and persisted -- ZERO master-side jobs run inside the micro-batch loop
-(asserted via a master-scan accumulator in tests/test_streaming.py) -- so
-each micro-batch shuffles only its own rows.  Exactly-once delivery: the
+the prefix blocker's doc table and postings) are built ONCE up front by
+``pipeline.fit_master`` and persisted -- ZERO master-side jobs run inside
+the micro-batch loop (asserted via a master-scan accumulator in
+tests/test_streaming.py) -- so each micro-batch shuffles only its own
+rows.  Exactly-once delivery: the
 streaming checkpoint's offset log skips committed batches on restart, and
 because a crash can land AFTER a batch's parquet job commits but BEFORE
 the checkpoint records it, the sink writes each batch to its own

@@ -280,15 +280,6 @@ def test_multimodal_decode_plumbing(spark):
     assert feats["u1"] != feats["u3"]
 
 
-def test_real_decode_is_stubbed():
-    with pytest.raises(NotImplementedError):
-        multimodal.real_decode(b"bytes")
-    with pytest.raises(NotImplementedError):
-        multimodal.real_resize(b"bytes", 64, 64)
-    with pytest.raises(NotImplementedError):
-        multimodal.real_frame(b"bytes", 0)
-
-
 def test_multimodal_resize_plumbing(spark):
     rows = [("u1", b"\x89PNGfakebytes"), ("u2", b""), ("u3", b"x")]
     df = spark.createDataFrame(rows, "url string, payload binary")

@@ -44,6 +44,43 @@ def test_fitted_equals_unfitted(spark, cfg):
     fitted.unpersist()
 
 
+def test_fitted_prefix_candidates_equal_unfitted(spark):
+    """The fit's master doc table and postings give the prefix blocker
+    exactly the candidates, unrounded cosines and ranks it builds per call
+    from the raw master weights."""
+    from name_matching_spark.operators.blocking import prefix_filtered_top_n
+    from name_matching_spark.operators.tfidf import (
+        explode_char_ngrams,
+        master_weights,
+        query_weights,
+    )
+
+    m, q = _corpus(spark)
+    cfg = MatchConfig(threshold=50.0, top_n=5, prefix_size=3)
+    fitted = fit_master(m, "id", "name", config=cfg)
+
+    def weights(side, fn):
+        return fn(explode_char_ngrams(side, "id", "name_norm",
+                                      cfg.ngram_range), fitted.idf)
+
+    qw = weights(_prepare(q, "id", "name", None, cfg), query_weights)
+    mw = weights(fitted.masters, master_weights)
+
+    def cands(**master):
+        return sorted(
+            (r["qid"], r["mid"], repr(r["cosine"]), r["rank"])
+            for r in prefix_filtered_top_n(
+                qw, mw, fitted.idf, cfg.top_n, prefix_size=3,
+                df_cap_frac=cfg.df_cap_frac, **master).collect())
+
+    unfitted = cands()
+    assert len(unfitted) >= 20
+    assert cands(master_pref=fitted.m_pref,
+                 master_map=fitted.m_map) == unfitted
+    assert dict(fitted.m_map.dtypes)["mm"] == "map<int,double>"
+    fitted.unpersist()
+
+
 def test_fitted_grouped_matching(spark):
     """Group-blocked matching through a grouped fit equals the direct
     grouped run; a group-arity mismatch between fit and call raises

@@ -111,3 +111,26 @@ def test_legal_suffix_rescore_evaluated_once(spark):
                                          legal_suffixes=True))
     assert len(_udf_nodes(_executed(out), "_rescore")) == 1
     assert out.count() >= 20
+
+
+def _master_id_aggregates(df) -> list[str]:
+    return [_label(n) for n in _nodes(_executed(df))
+            if n.nodeName().endswith("Aggregate")
+            and "collect_list(mid" in _label(n)]
+
+
+def test_fitted_prefix_call_runs_no_master_aggregation(spark):
+    """A fitted prefix call reads the fit's master postings and doc table
+    as they are: no aggregate of its plan collects master ids, while the
+    unfitted call (the control) builds its postings with one."""
+    m, q = _corpus(spark)
+    cfg = MatchConfig(threshold=50.0, top_n=5, prefix_size=3)
+    assert _master_id_aggregates(
+        match_names(spark, q, m, "id", "name", "id", "name", config=cfg))
+    fitted = fit_master(m, "id", "name", config=cfg)
+    try:
+        assert _master_id_aggregates(
+            match_names(spark, q, None, "id", "name", config=cfg,
+                        fitted=fitted)) == []
+    finally:
+        fitted.unpersist()
